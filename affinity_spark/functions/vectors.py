@@ -186,98 +186,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     """
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom != 0, dot(a, b) / denom)
-
-# ---------------------------------------------------------------------------
-# Fixed-dimension flat forms (whole-stage codegen).
-#
-# The zip_with/aggregate forms above are higher-order functions — Spark
-# plans them as CodegenFallback (interpreted eval), so a pairwise join
-# that scores cosine per candidate runs an interpreted 64-step fold per
-# PAIR (the r14 kmeans finding, guide §4.1: prefer built-ins/codegen).
-# When the dimension is a build-time constant — the embeddings corpus
-# contract, same as sign_bit_words/srp_project's fixed widths — the dot
-# and norm unroll into ONE flat left-associated sum of element_at terms
-# that whole-stage codegen compiles to straight-line arithmetic.
-#
-# Bit-identity with the fold forms: both evaluate CAST(x AS DOUBLE) *
-# CAST(y AS DOUBLE) terms in index order with left-associated IEEE
-# additions (the fold's 0.0 seed only matters for an all--0.0 input,
-# where the sign of a zero result flips — every consumer compares or
-# floors the value, and Spark SQL orders/compares -0.0 == 0.0, so the
-# distinction is unobservable; pinned by tests/test_vectors_fixed.py).
-# NULL parity: a NULL array yields NULL (branch 1), matching the fold
-# forms' NULL propagation. A dimension MISMATCH raises loudly instead of
-# the fold's silent NULL — the repo's established drifted-corpus guard
-# (sign_bit_words, srp_project).
-#
-# The expression is built as ONE SQL string parsed in a single py4j call
-# (the functions/lits.py lesson: per-term Column arithmetic costs one
-# driver round trip per operation — ~0.2 s per 64-dim expression), so
-# the inputs are column NAMES, not Column objects.
-# ---------------------------------------------------------------------------
-
-
-def _dot_terms(a: str, b: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST(element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(element_at({b}, {i}) AS DOUBLE))"
-        for i in range(1, dim + 1)
-    )
-
-
-def _sq_terms(a: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST(element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(element_at({a}, {i}) AS DOUBLE))"
-        for i in range(1, dim + 1)
-    )
-
-
-def _guarded(expr: str, dim: int, fn: str, *cols: str) -> Column:
-    nulls = " OR ".join(f"{c} IS NULL" for c in cols)
-    sizes = " AND ".join(f"size({c}) = {dim}" for c in cols)
-    return F.expr(
-        f"CASE WHEN {nulls} THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {sizes} THEN ({expr}) "
-        f"ELSE CAST(raise_error('{fn}: input dim != {dim}') AS DOUBLE) END"
-    )
-
-
-def dot_fixed(a: str, b: str, dim: int) -> Column:
-    """Codegen'd dot product of two fixed-``dim`` array columns (by NAME).
-    Bit-identical to :func:`dot` on well-formed input; loud on drifted
-    dims; NULL on NULL input."""
-    return _guarded(_dot_terms(a, b, dim), dim, "dot_fixed", a, b)
-
-
-def l2_norm_fixed(a: str, dim: int) -> Column:
-    """Codegen'd L2 norm of a fixed-``dim`` array column (by NAME).
-
-    A NULL array yields 0.0, NOT NULL — deliberately: every consumer
-    guards the denominator with ``!= 0`` so 0-vs-NULL is
-    indistinguishable downstream, and the NON-NULLABLE output stops
-    InferFiltersFromConstraints from deriving an ``isnotnull(norm)``
-    predicate that pushdown would substitute into the scan filter as the
-    whole 64-term sum — generated twice per row and over janino's 64KB
-    method limit (measured on the batch_search stage)."""
-    return F.expr(
-        f"coalesce(CASE WHEN {a} IS NULL THEN CAST(NULL AS DOUBLE) "
-        f"WHEN size({a}) = {dim} THEN sqrt({_sq_terms(a, dim)}) "
-        f"ELSE CAST(raise_error('l2_norm_fixed: input dim != {dim}') "
-        f"AS DOUBLE) END, 0.0D)"
-    )
-
-
-def cosine_similarity_fixed(a: str, b: str, dim: int) -> Column:
-    """Codegen'd cosine similarity of two fixed-``dim`` array columns (by
-    NAME); NULL for zero-norm inputs (the ANSI divide guard of
-    :func:`cosine_similarity`). Prefer precomputing per-row norms before
-    a pairwise join (``cosine_join_within`` does) — this form recomputes
-    both norms per evaluation, relying on codegen subexpression
-    elimination to fold the duplicated denominator."""
-    denom = f"(sqrt({_sq_terms(a, dim)}) * sqrt({_sq_terms(b, dim)}))"
-    body = (
-        f"CASE WHEN {denom} != 0.0D THEN ({_dot_terms(a, b, dim)}) / {denom} "
-        "END"
-    )
-    return _guarded(body, dim, "cosine_similarity_fixed", a, b)

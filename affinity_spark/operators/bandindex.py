@@ -37,8 +37,13 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from affinity_spark.operators.dedup import lsh_bands_mapside
 from affinity_spark.functions.lits import local_df
+from affinity_spark.operators.bucketing import (
+    BucketLever,
+    auto_bucket_count,
+    bytes_floor_cap,
+)
+from affinity_spark.operators.dedup import lsh_bands_mapside
 from affinity_spark.sources.keyed_table import KeyedTable
 
 
@@ -53,75 +58,33 @@ class BandIndex:
     ) -> None:
         self.spark = spark
         self.id_col = id_col
-        # None = AUTO: build() sizes the lever ∝ corpus and COMMITS it;
-        # later operations resolve the committed count (operators/bucketing)
-        self._explicit_buckets = doc_buckets
-        self._effective: int | None = None
         self._table = KeyedTable(
             spark, os.path.join(path, "bands"), ["band_hash"], ts_col="band_id",
             num_buckets=num_buckets, partition_col="_bucket",
             single_file_partitions=True,
         )
-
-    def _effective_buckets(self) -> int:
-        if self._effective is None:
-            from affinity_spark.operators.bucketing import committed_buckets
-
-            self._effective = committed_buckets(
-                self._table, "doc_buckets", self._explicit_buckets
-            )
-        return self._effective
+        # None = AUTO: build() sizes the lever ∝ corpus and COMMITS it
+        self._lever = BucketLever(
+            "doc_buckets", id_col, [self._table],
+            lambda: auto_bucket_count(
+                self._table.read().select(id_col).distinct().count()
+            ),
+            doc_buckets,
+        )
 
     @property
     def doc_buckets(self) -> int:
-        return self._effective_buckets()
+        return self._lever.count
 
     def needs_rebucket(self, factor: float = 4.0) -> bool:
-        """Growth trigger for the bucket lever (the IVF ``needs_retrain``
-        discipline): the corpus outgrew the committed count ``factor``×."""
-        from affinity_spark.operators.bucketing import auto_bucket_count
-
-        n_docs = (
-            self._table.read().select(self.id_col).distinct().count()
-        )
-        return auto_bucket_count(n_docs) >= factor * self._effective_buckets()
+        return self._lever.needs_rebucket(factor)
 
     def rebucket(self, doc_buckets: int | None = None) -> int:
-        """Re-place the band table under a fresh bucket count (auto ∝
-        current corpus unless given) — the amortized full rewrite that
-        keeps admits delta-IO as the corpus grows. Pure physical
-        placement: bands/probes are bit-identical across it."""
-        from affinity_spark.operators.bucketing import auto_bucket_count
-
-        cur = self._table.read()
-        new = doc_buckets or auto_bucket_count(
-            cur.select(self.id_col).distinct().count()
-        )
-        self._table.overwrite(
-            cur.withColumn(
-                "_bucket",
-                F.pmod(F.hash(F.col(self.id_col).cast("string")), F.lit(new)),
-            ),
-            meta={**self._table.commit_meta(), "doc_buckets": new},
-        )
-        self._effective = new
-        return new
-
-    def _bucket(self) -> F.Column:
-        # hash the STRING form: murmur3 of int32 and int64 differ for the
-        # same value, so an id arriving as a different numeric width (e.g.
-        # a python-literal deleted_ids frame inferring long against an int
-        # corpus) would bucket inconsistently and the merge would rewrite
-        # the wrong partition — string canonicalization makes the bucket a
-        # function of the VALUE
-        return F.pmod(
-            F.hash(F.col(self.id_col).cast("string")),
-            F.lit(self._effective_buckets()),
-        )
+        return self._lever.rebucket(doc_buckets)
 
     def _bands_delta(self, docs_arr: DataFrame) -> DataFrame:
         return lsh_bands_mapside(docs_arr, self.id_col).withColumn(
-            "_bucket", self._bucket()
+            "_bucket", self._lever.col()
         )
 
     # --- build / maintain -------------------------------------------------
@@ -131,23 +94,15 @@ class BandIndex:
         (``dedup.doc_shingle_arrays``). Sizes the bucket lever ∝ corpus
         (no manual knob) unless the constructor pinned it, and commits
         the count so every later admit agrees."""
-        from affinity_spark.operators.bucketing import (
-            auto_bucket_count,
-            bytes_floor_cap,
-        )
-
         docs_arr = docs_arr.persist()
         n_docs = docs_arr.count()
         # bytes floor: ~16 band rows/doc at ~16 B on disk — buckets below
         # a row group only multiply probe-side file opens (r13)
-        self._effective = (
-            self._explicit_buckets
-            if self._explicit_buckets is not None
-            else min(auto_bucket_count(n_docs), bytes_floor_cap(n_docs * 256))
+        self._lever.freeze(
+            lambda: min(auto_bucket_count(n_docs), bytes_floor_cap(n_docs * 256))
         )
         self._table.overwrite(
-            self._bands_delta(docs_arr),
-            meta={"doc_buckets": self._effective},
+            self._bands_delta(docs_arr), meta=self._lever.meta()
         )
         docs_arr.unpersist()
 
@@ -163,12 +118,11 @@ class BandIndex:
         # materialize first: a generator is truthy even when empty and
         # can't be consumed twice — branch on the list's length
         deleted = list(deleted_ids)
-        # CAS base FIRST, then re-resolve the committed lever: never admit
-        # under a bucket count cached before another instance's rebucket()
-        # (stale-modulus placement = the r5 silent-corruption class); a
-        # rebucket landing after this read fails the CAS loudly (r12 ADVICE)
+        # CAS base FIRST, then re-resolve the committed lever
+        # (operators/bucketing); a rebucket landing after this read fails
+        # the CAS loudly (r12 ADVICE)
         base_version = self._table._current_version_dir()
-        self._effective = None
+        self._lever.refresh()
         touched = new_arr.select(self.id_col).distinct()
         if len(deleted) > 0:
             gone = local_df(
@@ -176,27 +130,9 @@ class BandIndex:
             )
             touched = touched.unionByName(gone).distinct()
         touched_p = touched.persist()
-        buckets = [
-            r[0]
-            for r in touched_p.select(
-                self._bucket().alias("_bucket")
-            ).distinct().collect()
-        ]
-        cur = self._table.read()
-        kept = (
-            cur.filter(F.col("_bucket").isin(buckets))
-            .join(F.broadcast(touched_p), self.id_col, "left_anti")
-            .select(*cur.columns)
-        )
-        # cast the delta to the SNAPSHOT's schema: a changelog arriving at
-        # a different numeric width (long ids against an int table) would
-        # otherwise write mixed physical parquet types into one table and
-        # poison every later read
-        delta = self._bands_delta(new_arr).select(
-            *[F.col(c).cast(cur.schema[c].dataType).alias(c) for c in cur.columns]
-        )
-        self._table.overwrite_partitions(
-            kept.unionByName(delta), buckets, expected_base=base_version
+        self._lever.merge(
+            self._table, self._bands_delta(new_arr), touched_p,
+            self._lever.touched(touched_p), base_version,
         )
         touched_p.unpersist()
 

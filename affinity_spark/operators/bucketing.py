@@ -1,26 +1,37 @@
 """Auto-sized hive-bucket lever shared by the maintained-index families.
 
-The delta-IO admit contract (PostingsIndex / BandIndex / PrefixIndex /
-ClusterStore) holds only in the regime **batch << buckets and buckets ∝
-corpus**: an admit rewrites ~min(batch, buckets) partition dirs of
-corpus/buckets rows each, so with a FIXED small bucket count the
+BandIndex, PostingsIndex, PrefixIndex, ClusterStore and MediaIndex lay
+their tables out as ``_bucket=<n>`` hive partitions, with
+``_bucket = pmod(hash(cast(<column> AS string)), <count>)``. An admit then
+rewrites only the touched bucket dirs and hardlinks the rest
+(:meth:`BucketLever.merge` over ``KeyedTable.overwrite_partitions``;
+ClusterStore, whose admit relabels, runs its own merge). The hash runs over the STRING form:
+murmur3 of int32 and int64 differ for the same value, so an id arriving
+at a different numeric width would otherwise land in another bucket and
+the merge would rewrite the wrong dir while hardlinking the stale one.
+
+That delta-IO contract holds only in the regime **batch << buckets and
+buckets ∝ corpus**: an admit rewrites ~min(batch, buckets) partition dirs
+of corpus/buckets rows each, so with a FIXED small bucket count the
 per-bucket size grows with the corpus and a constant batch approaches a
 full rewrite (BASELINE r11k measured 9.0× rewritten bytes at 10× corpus
 under the old ``doc_buckets=8`` default — the anti-pattern regime;
-buckets ∝ corpus measured 1.06×).
+buckets ∝ corpus measured 1.06×). :class:`BucketLever` makes the count
+automatic, and is the one implementation every store delegates to:
 
-This module makes the lever automatic (r11 verdict #1):
-
-- :func:`auto_bucket_count` sizes the count ∝ corpus at ``build()``
-  (power of two for stable growth steps, floored so tiny local corpora
-  keep the old default);
-- each store COMMITS the chosen count in its table meta and always
-  resolves the committed value for admits/probes — bucket placement is
-  a function of the count, so the committed rows' count is the only
-  correct one regardless of what a re-attaching constructor was told;
+- ``build()`` sizes the count ∝ corpus (:func:`auto_bucket_count`,
+  capped by :func:`bytes_floor_cap`) unless the constructor pinned it,
+  and COMMITS it in the table meta (``doc_buckets``/``cluster_buckets``);
+- every later operation resolves the COMMITTED count
+  (:func:`committed_buckets`) — placement is a function of the count, so
+  the committed rows' count is the only correct one whatever a
+  re-attaching constructor was told. An admit re-resolves it after
+  capturing its CAS base, so a long-lived instance never places rows
+  under a count cached before another instance's ``rebucket()``;
 - ``needs_rebucket()`` fires when the corpus has outgrown the committed
-  count (the IVFIndex ``needs_retrain`` discipline) and ``rebucket()``
-  is the amortized full rewrite that re-freezes the lever.
+  count (the IVFIndex ``needs_retrain`` discipline) and ``rebucket()`` is
+  the amortized full rewrite that re-places every table and re-freezes
+  the count.
 
 At deployment scale the same ∝-corpus rule applies with a larger
 ``rows_per_bucket`` so each bucket is a few hundred MB; the constant
@@ -29,6 +40,11 @@ cancels out of the rewrite RATIO, which is what the rehearsal
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
 def auto_bucket_count(
@@ -83,3 +99,97 @@ def committed_buckets(table, meta_key: str, explicit: int | None) -> int:
     if committed is not None:
         return int(committed)
     return explicit if explicit is not None else 8
+
+
+class BucketLever:
+    """One store's bucket lever: ``column`` is hashed into ``_bucket``,
+    ``tables`` are re-placed by :meth:`rebucket` (``tables[0]`` holds the
+    committed count under ``meta_key``), ``auto_size()`` is the store's
+    auto count for its current corpus, and ``explicit`` is the
+    constructor's pinned count (``None`` = auto)."""
+
+    def __init__(
+        self,
+        meta_key: str,
+        column: str,
+        tables: Sequence,
+        auto_size: Callable[[], int],
+        explicit: int | None,
+    ) -> None:
+        self.meta_key = meta_key
+        self.column = column
+        self.tables = list(tables)
+        self.auto_size = auto_size
+        self.explicit = explicit
+        self._count: int | None = None
+
+    @property
+    def count(self) -> int:
+        """The committed count, cached until :meth:`refresh`."""
+        if self._count is None:
+            self._count = committed_buckets(
+                self.tables[0], self.meta_key, self.explicit
+            )
+        return self._count
+
+    def refresh(self) -> None:
+        """Re-resolve the committed count on next use (call after the
+        admit's CAS base is captured)."""
+        self._count = None
+
+    def freeze(self, auto: Callable[[], int]) -> int:
+        """Fix the count for a build: the pinned one, else ``auto()``."""
+        self._count = self.explicit if self.explicit is not None else auto()
+        return self._count
+
+    def meta(self) -> dict:
+        return {self.meta_key: self.count}
+
+    def col(self) -> Column:
+        """The ``_bucket`` value of the lever's column under its count."""
+        return F.pmod(F.hash(F.col(self.column).cast("string")), F.lit(self.count))
+
+    def touched(self, ids) -> list:
+        """The buckets holding ``ids`` (a frame with the lever's column) —
+        a driver-side list bounded by the bucket count."""
+        return [
+            r[0]
+            for r in ids.select(self.col().alias("_bucket")).distinct().collect()
+        ]
+
+    def merge(self, table, delta, ids, buckets, expected_base, meta=None) -> None:
+        """Replace the rows of ``ids`` in ``buckets`` by ``delta``: only
+        those bucket dirs are scanned and rewritten, every other one is
+        hardlinked forward (``KeyedTable.overwrite_partitions``). The delta
+        is cast to the snapshot's schema — a changelog at another numeric
+        width (long ids against an int table) would otherwise write mixed
+        physical parquet types into one table and poison every later read."""
+        cur = table.read()
+        kept = (
+            cur.filter(F.col("_bucket").isin(buckets))
+            .join(F.broadcast(ids), self.column, "left_anti")
+            .select(*cur.columns)
+        )
+        delta = delta.select(
+            *[F.col(c).cast(cur.schema[c].dataType).alias(c) for c in cur.columns]
+        )
+        table.overwrite_partitions(
+            kept.unionByName(delta), buckets,
+            expected_base=expected_base, meta=meta,
+        )
+
+    def needs_rebucket(self, factor: float) -> bool:
+        return self.auto_size() >= factor * self.count
+
+    def rebucket(self, n: int | None = None, meta: dict | None = None) -> int:
+        """Re-place every table under ``n`` (auto unless given) and commit
+        it, with ``meta`` merged into each table's commit meta. Pure
+        physical placement: reads are identical across it."""
+        new = n or self.auto_size()
+        self._count = new
+        for table in self.tables:
+            table.overwrite(
+                table.read().withColumn("_bucket", self.col()),
+                meta={**table.commit_meta(), **(meta or {}), self.meta_key: new},
+            )
+        return new

@@ -49,6 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import local_df
+from affinity_spark.operators.bucketing import (
+    BucketLever,
+    auto_bucket_count,
+    bytes_floor_cap,
+)
 from affinity_spark.sources.keyed_table import KeyedTable
 
 
@@ -66,70 +71,35 @@ class ClusterStore:
         self.spark = spark
         self.path = path
         self.id_col = id_col
-        # None = AUTO: build()/first-admit size the lever ∝ corpus and
-        # COMMIT it; later admits resolve the committed count
-        # (operators/bucketing — bucket placement must match the rows)
-        self._explicit_buckets = cluster_buckets
-        self._effective: int | None = None
         self._table = KeyedTable(
             spark, os.path.join(path, "clusters"), [id_col],
             ts_col="cluster_id", num_buckets=num_buckets,
             partition_col="_bucket", single_file_partitions=True,
         )
-
-    def _effective_buckets(self) -> int:
-        if self._effective is None:
-            from affinity_spark.operators.bucketing import committed_buckets
-
-            self._effective = committed_buckets(
-                self._table, "cluster_buckets", self._explicit_buckets
-            )
-        return self._effective
+        # None = AUTO: build()/first-admit size the lever ∝ corpus and
+        # COMMIT it; rows are placed by their cluster id
+        self._lever = BucketLever(
+            "cluster_buckets", "cluster_id", [self._table],
+            lambda: self._capped_auto(self._table.read().count()),
+            cluster_buckets,
+        )
 
     @property
     def cluster_buckets(self) -> int:
-        return self._effective_buckets()
+        return self._lever.count
 
     @staticmethod
     def _capped_auto(n_rows: int) -> int:
         """Auto lever for this family: one ~16 B (id, cluster) row per
         doc; bytes-floored so buckets stay at least row-group-sized
         (finer splits only multiply read-side file opens — r13)."""
-        from affinity_spark.operators.bucketing import (
-            auto_bucket_count,
-            bytes_floor_cap,
-        )
-
         return min(auto_bucket_count(n_rows), bytes_floor_cap(n_rows * 16))
 
     def needs_rebucket(self, factor: float = 4.0) -> bool:
-        """Growth trigger for the bucket lever (the IVF ``needs_retrain``
-        discipline): the store outgrew the committed count ``factor``×."""
-        ideal = self._capped_auto(self._table.read().count())
-        return ideal >= factor * self._effective_buckets()
+        return self._lever.needs_rebucket(factor)
 
     def rebucket(self, cluster_buckets: int | None = None) -> int:
-        """Re-place the assignment table under a fresh bucket count (auto
-        ∝ current store unless given) — the amortized full rewrite that
-        keeps admits delta-IO as the corpus grows. Pure physical
-        placement: assignments are identical across it."""
-        cur = self._table.read()
-        new = cluster_buckets or self._capped_auto(cur.count())
-        self._table.overwrite(
-            cur.withColumn(
-                "_bucket",
-                F.pmod(F.hash(F.col("cluster_id").cast("string")), F.lit(new)),
-            ),
-            meta={**self._table.commit_meta(), "cluster_buckets": new},
-        )
-        self._effective = new
-        return new
-
-    def _bucket_of(self, col: F.Column) -> F.Column:
-        # string-canonical hash (the BandIndex width rule)
-        return F.pmod(
-            F.hash(col.cast("string")), F.lit(self._effective_buckets())
-        )
+        return self._lever.rebucket(cluster_buckets)
 
     # --- build / maintain -----------------------------------------------
 
@@ -159,14 +129,10 @@ class ClusterStore:
                 .alias("cluster_id"),
             )
         )
-        self._effective = (
-            self._explicit_buckets
-            if self._explicit_buckets is not None
-            else self._capped_auto(doc_ids.count())
-        )
+        self._lever.freeze(lambda: self._capped_auto(doc_ids.count()))
         self._table.overwrite(
-            rows.withColumn("_bucket", self._bucket_of(F.col("cluster_id"))),
-            meta={"cluster_buckets": self._effective},
+            rows.withColumn("_bucket", self._lever.col()),
+            meta=self._lever.meta(),
         )
 
     def exists(self) -> bool:
@@ -329,27 +295,20 @@ class ClusterStore:
         if not self.exists():
             # first commit IS the corpus so far — size the lever from it;
             # needs_rebucket()/rebucket() re-freeze as the store grows
-            self._effective = (
-                self._explicit_buckets
-                if self._explicit_buckets is not None
-                else self._capped_auto(len(new_rows))
-            )
+            self._lever.freeze(lambda: self._capped_auto(len(new_rows)))
             rows = local_df(
                 self.spark, new_rows, f"{self.id_col} long, cluster_id long"
             )
             self._table.overwrite(
-                rows.withColumn(
-                    "_bucket", self._bucket_of(F.col("cluster_id"))
-                ),
-                meta={"cluster_buckets": self._effective},
+                rows.withColumn("_bucket", self._lever.col()),
+                meta=self._lever.meta(),
             )
             return
-        # CAS base FIRST, then re-resolve the committed lever: never place
-        # under a bucket count cached before another instance's rebucket()
-        # (stale-modulus placement = the r5 silent-corruption class); a
-        # rebucket landing after this read fails the CAS loudly (r12 ADVICE)
+        # CAS base FIRST, then re-resolve the committed lever
+        # (operators/bucketing); a rebucket landing after this read fails
+        # the CAS loudly (r12 ADVICE)
         base_version = self._table._current_version_dir()
-        self._effective = None
+        self._lever.refresh()
         # touched buckets: new rows' destination buckets + merged
         # clusters' source AND destination buckets
         touched_ids = (
@@ -360,14 +319,11 @@ class ClusterStore:
         if not touched_ids:
             return
         touched_buckets = sorted(
-            {
-                int(r[0])
-                for r in local_df(
-                    self.spark, [(c,) for c in touched_ids], "c long"
+            self._lever.touched(
+                local_df(
+                    self.spark, [(c,) for c in touched_ids], "cluster_id long"
                 )
-                .select(self._bucket_of(F.col("c")))
-                .collect()
-            }
+            )
         )
         cur = self._table.read()
         # a REPLAYED batch's rows are already committed in these buckets:
@@ -390,13 +346,13 @@ class ClusterStore:
                     self.id_col,
                     F.coalesce("_new", "cluster_id").alias("cluster_id"),
                 )
-                .withColumn("_bucket", self._bucket_of(F.col("cluster_id")))
+                .withColumn("_bucket", self._lever.col())
             )
         else:
             kept = kept.select(self.id_col, "cluster_id", "_bucket")
         delta = local_df(
             self.spark, new_rows, f"{self.id_col} long, cluster_id long"
-        ).withColumn("_bucket", self._bucket_of(F.col("cluster_id")))
+        ).withColumn("_bucket", self._lever.col())
         self._table.overwrite_partitions(
             kept.unionByName(delta).select(
                 *[
@@ -420,19 +376,15 @@ class ClusterStore:
             (F.col(self.id_col) == F.col("cluster_id")).alias("is_canonical"),
         )
 
-    def maintainer(self, pair_source, compact_every: int = 32):
+    def maintainer(self, pair_source):
         """foreachBatch maintenance: ``pair_source(batch_df)`` returns the
         batch's verified (id_a, id_b) edges (e.g. a PrefixIndex probe);
         replay-idempotent (same batch -> same merges -> same rows)."""
-        state = {"n": 0}
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
                 return
             self.admit(batch_df, pair_source(batch_df))
-            state["n"] += 1
-            if compact_every and state["n"] % compact_every == 0:
-                self._table.compact()
 
         return apply
 

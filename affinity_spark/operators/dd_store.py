@@ -6,17 +6,15 @@ Same deployment question, different algebra: "p99 of value over
 counts over the in-range day partitions (PartitionFilters-pruned) and
 rank-selecting — raw rows never rescanned. But unlike HLL registers
 (elementwise MAX — idempotent, replay-safe for free), DD counts merge by
-ADDITION, which double-counts on replay. The maintainer therefore
-carries the lineage-scoped applied-batch ledger this repo's foreachBatch
-rule prescribes (CLAUDE.md r5: a bare batch-id marker breaks on
-checkpoint reset — batch ids restart at 0 — so the marker is scoped by
-the stream's run id): an admit tagged (run_id, batch_id) that is already
-in the ledger is dropped whole.
+ADDITION, which double-counts on replay. The maintainer therefore tags
+each admit with a run-scoped fence (a bare batch-id marker breaks on
+checkpoint reset — batch ids restart at 0 — so the fence is scoped by
+the stream's run id), and an admit whose fence is already in the
+table's ledger (``KeyedTable.applied_fences``) is dropped whole.
 
 That contrast IS the design lesson: prefer max-mergeable state where
 semantics allow (HLL); when the algebra is additive, idempotence must be
-bought with an explicit applied-ledger — here it costs two meta keys per
-commit and nothing per row.
+bought with an explicit replay fence.
 """
 
 from __future__ import annotations
@@ -33,13 +31,6 @@ from affinity_spark.sources.keyed_table import KeyedTable
 class DDStore:
     """Day-partitioned DDSketch bucket-count table with merge-on-read
     range quantiles and a replay-fenced streaming maintainer."""
-
-    # The applied-fence ledger keeps only this many trailing entries:
-    # Structured Streaming replays at most the last uncommitted batch(es)
-    # after a restart, so a bounded window preserves the replay fence while
-    # keeping commit meta O(1) — an unbounded ledger is O(n) meta per admit
-    # and O(n^2) cumulative over a long-running stream.
-    FENCE_WINDOW = 256
 
     def __init__(
         self,
@@ -71,38 +62,24 @@ class DDStore:
     # --- build / maintain ---------------------------------------------------
 
     def build(self, df: DataFrame) -> None:
-        self._table.overwrite(self._daily_counts(df), meta={"dd_applied": []})
-
-    def _applied(self) -> list[str]:
-        return list(self._table.commit_meta().get("dd_applied") or [])
+        self._table.overwrite(self._daily_counts(df), meta={}, reset_fences=True)
 
     def admit(self, batch: DataFrame, fence: str | None = None) -> None:
         """ADD a batch's daily bucket counts into the touched day
         partitions (hardlinked carry-over elsewhere). ``fence`` is the
         replay key ("run_id:batch_id" from the maintainer): a fence
-        already in the applied ledger drops the batch WHOLE — addition
-        is not idempotent, so the fence is what makes replay safe.
-
-        CAVEAT — the ledger keeps only the trailing ``FENCE_WINDOW``
-        entries, sized for Structured Streaming's replay pattern (at most
-        the last uncommitted batches after a restart). A MANUAL re-admit
-        of a fence older than the window floor is silently re-applied and
-        double-counts; don't replay historical fences by hand — rebuild
-        instead."""
-        applied = self._applied()
-        if fence is not None and fence in applied:
+        already in the table's ledger drops the batch WHOLE — addition
+        is not idempotent, so the fence is what makes replay safe. The
+        ledger keeps only the trailing fences: rebuild rather than
+        re-admit historical fences by hand."""
+        if fence is not None and fence in self._table.applied_fences():
             return
         delta = self._daily_counts(batch)
         days = [r[0] for r in delta.select("day").distinct().collect()]
-        meta = {
-            "dd_applied": (applied + ([fence] if fence else []))[
-                -self.FENCE_WINDOW :
-            ]
-        }
         if not days:
             return
         if not self._table.exists():
-            self._table.overwrite(delta, meta=meta)
+            self._table.overwrite(delta, fence=fence)
             return
         base_version = self._table._current_version_dir()
         cur = self._table.read().filter(F.col("day").isin(days))
@@ -113,7 +90,7 @@ class DDStore:
             .select(*cur.columns)
         )
         self._table.overwrite_partitions(
-            merged, days, expected_base=base_version, meta=meta
+            merged, days, expected_base=base_version, fence=fence
         )
 
     def maintainer(self, run_id: str, compact_every: int = 32):
@@ -128,7 +105,7 @@ class DDStore:
         partitions at shuffle-partition granularity, so a long-running
         stream decays into tens of tiny files per day (the small-files
         problem); compaction squashes them to ~one file per day dir, same
-        rows, fences carried in the commit meta. 0 disables."""
+        rows, fence ledger carried forward. 0 disables."""
         state = {"n": 0}
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:

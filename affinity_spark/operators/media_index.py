@@ -40,6 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import local_df
+from affinity_spark.operators.bucketing import (
+    BucketLever,
+    auto_bucket_count,
+    bytes_floor_cap,
+)
 from affinity_spark.sources.keyed_table import KeyedTable
 
 
@@ -114,71 +119,38 @@ class MediaIndex:
         self.id_col = id_col
         self.bits = bits
         self.max_hamming = max_hamming
-        # None = AUTO (operators/bucketing): build() sizes ∝ corpus and
-        # COMMITS the count; later operations resolve the committed value
-        self._explicit_buckets = doc_buckets
-        self._effective: int | None = None
         self._table = KeyedTable(
             spark, os.path.join(path, "fps"), [id_col, "modality"],
             ts_col="fp", num_buckets=num_buckets, partition_col="_bucket",
             single_file_partitions=True,
         )
+        # None = AUTO (operators/bucketing): build() sizes ∝ corpus and
+        # COMMITS the count; later operations resolve the committed value
+        self._lever = BucketLever(
+            "doc_buckets", id_col, [self._table],
+            lambda: self._capped_auto(
+                self._table.read().select(id_col).distinct().count()
+            ),
+            doc_buckets,
+        )
 
     # --- bucket lever -----------------------------------------------------
 
-    def _effective_buckets(self) -> int:
-        if self._effective is None:
-            from affinity_spark.operators.bucketing import committed_buckets
-
-            self._effective = committed_buckets(
-                self._table, "doc_buckets", self._explicit_buckets
-            )
-        return self._effective
-
     @property
     def doc_buckets(self) -> int:
-        return self._effective_buckets()
-
-    def _bucket(self) -> F.Column:
-        # string-canonical hash (the r5 BandIndex numeric-width rule)
-        return F.pmod(
-            F.hash(F.col(self.id_col).cast("string")),
-            F.lit(self._effective_buckets()),
-        )
+        return self._lever.count
 
     @staticmethod
     def _capped_auto(n_docs: int) -> int:
         """Auto lever for this family: three ~20 B modality rows per doc;
         bytes-floored so buckets stay at least row-group-sized (r13)."""
-        from affinity_spark.operators.bucketing import (
-            auto_bucket_count,
-            bytes_floor_cap,
-        )
-
         return min(auto_bucket_count(n_docs), bytes_floor_cap(n_docs * 64))
 
     def needs_rebucket(self, factor: float = 4.0) -> bool:
-        """Growth trigger (IVF ``needs_retrain`` discipline): distinct
-        docs outgrew the committed count ``factor``×."""
-        n_docs = self._table.read().select(self.id_col).distinct().count()
-        return self._capped_auto(n_docs) >= factor * self._effective_buckets()
+        return self._lever.needs_rebucket(factor)
 
     def rebucket(self, doc_buckets: int | None = None) -> int:
-        """Amortized physical re-placement under a fresh (auto unless
-        given) bucket count; fingerprints and served pairs identical."""
-        cur = self._table.read()
-        new = doc_buckets or self._capped_auto(
-            cur.select(self.id_col).distinct().count()
-        )
-        self._table.overwrite(
-            cur.withColumn(
-                "_bucket",
-                F.pmod(F.hash(F.col(self.id_col).cast("string")), F.lit(new)),
-            ),
-            meta={**self._table.commit_meta(), "doc_buckets": new},
-        )
-        self._effective = new
-        return new
+        return self._lever.rebucket(doc_buckets)
 
     # --- build / maintain ---------------------------------------------------
 
@@ -195,14 +167,12 @@ class MediaIndex:
         never again (admits fingerprint only their batch). Sizes the
         bucket lever ∝ distinct docs (no manual knob) unless pinned."""
         fps = self._normalized(fps).persist()
-        self._effective = (
-            self._explicit_buckets
-            if self._explicit_buckets is not None
-            else self._capped_auto(fps.select(self.id_col).distinct().count())
+        self._lever.freeze(
+            lambda: self._capped_auto(fps.select(self.id_col).distinct().count())
         )
         self._table.overwrite(
-            fps.withColumn("_bucket", self._bucket()),
-            meta={"doc_buckets": self._effective},
+            fps.withColumn("_bucket", self._lever.col()),
+            meta=self._lever.meta(),
         )
         fps.unpersist()
 
@@ -226,14 +196,11 @@ class MediaIndex:
             # legacy default 8 (r12 ADVICE)
             self.build(new_fps)
             return
-        # CAS base FIRST, then re-resolve the committed lever: a long-lived
-        # instance must not cache across another instance's rebucket()
-        # (placement is a function of the COMMITTED count — an admit under
-        # a stale modulus merges wrong dirs while hardlinking stale ones,
-        # the r5 silent-corruption class). A rebucket landing after this
-        # read fails the CAS loudly instead.
+        # CAS base FIRST, then re-resolve the committed lever
+        # (operators/bucketing); a rebucket landing after this read fails
+        # the CAS loudly instead
         base_version = self._table._current_version_dir()
-        self._effective = None
+        self._lever.refresh()
         touched = new_fps.select(self.id_col).distinct()
         if len(deleted) > 0:
             gone = local_df(
@@ -241,23 +208,9 @@ class MediaIndex:
             )
             touched = touched.unionByName(gone).distinct()
         touched_p = touched.persist()
-        buckets = [
-            r[0]
-            for r in touched_p.select(
-                self._bucket().alias("_bucket")
-            ).distinct().collect()
-        ]
-        cur = self._table.read()
-        kept = (
-            cur.filter(F.col("_bucket").isin(buckets))
-            .join(F.broadcast(touched_p), self.id_col, "left_anti")
-            .select(*cur.columns)
-        )
-        delta = new_fps.withColumn("_bucket", self._bucket()).select(
-            *[F.col(c).cast(cur.schema[c].dataType).alias(c) for c in cur.columns]
-        )
-        self._table.overwrite_partitions(
-            kept.unionByName(delta), buckets, expected_base=base_version
+        self._lever.merge(
+            self._table, new_fps.withColumn("_bucket", self._lever.col()),
+            touched_p, self._lever.touched(touched_p), base_version,
         )
         touched_p.unpersist()
 
@@ -309,20 +262,14 @@ class MediaIndex:
             .select("modality", "new_id", "dup_of", "hamming")
         )
 
-    def maintainer(self, fingerprint_source, compact_every: int = 0):
+    def maintainer(self, fingerprint_source):
         """foreachBatch maintenance: ``fingerprint_source(batch_df)``
         returns the batch's (id, modality, fp) rows (the decode kernel,
-        batch-sized); replay-idempotent via the keyed partition merge.
-        ``compact_every`` kept for interface parity — the single-file
-        partition layout has no small-file decay (compact is a no-op)."""
-        state = {"n": 0}
+        batch-sized); replay-idempotent via the keyed partition merge."""
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
                 return
             self.admit(fingerprint_source(batch_df))
-            state["n"] += 1
-            if compact_every and state["n"] % compact_every == 0:
-                self._table.compact()
 
         return apply

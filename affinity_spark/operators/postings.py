@@ -47,6 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import local_df
+from affinity_spark.operators.bucketing import (
+    BucketLever,
+    auto_bucket_count,
+    bytes_floor_cap,
+)
 from affinity_spark.sources.keyed_table import KeyedTable
 
 
@@ -87,8 +92,6 @@ class PostingsIndex:
         # the index). None = AUTO: build() sizes the lever ∝ corpus and
         # COMMITS the count (operators/bucketing) — per-bucket rewrite
         # cost stays a constant with no manual knob.
-        self._explicit_buckets = doc_buckets
-        self._effective: int | None = None
         self._doclen = KeyedTable(
             spark, os.path.join(path, "doclen"), [id_col], ts_col="dl",
             num_buckets=num_buckets, partition_col="_bucket",
@@ -110,29 +113,19 @@ class PostingsIndex:
                 ts_col="pos" if n == 1 else "tf", num_buckets=num_buckets,
                 partition_col="_bucket", single_file_partitions=True,
             )
-
-    def _effective_buckets(self) -> int:
-        if self._effective is None:
-            from affinity_spark.operators.bucketing import committed_buckets
-
-            self._effective = committed_buckets(
-                self._doclen, "doc_buckets", self._explicit_buckets
-            )
-        return self._effective
+        self._lever = BucketLever(
+            "doc_buckets", id_col, [self._doclen, *self._tables.values()],
+            self._auto_count, doc_buckets,
+        )
 
     @property
     def doc_buckets(self) -> int:
-        return self._effective_buckets()
+        return self._lever.count
 
     @staticmethod
     def _capped_auto(n_docs: int, total_tokens: int) -> int:
         """The auto lever for THIS family: ∝ docs, bytes-floor-capped at
         ~8 B/posting-row of the largest gram table."""
-        from affinity_spark.operators.bucketing import (
-            auto_bucket_count,
-            bytes_floor_cap,
-        )
-
         return min(auto_bucket_count(n_docs), bytes_floor_cap(total_tokens * 8))
 
     def _auto_count(self) -> int:
@@ -142,42 +135,16 @@ class PostingsIndex:
         return self._capped_auto(int(row["n"]), int(row["tok"] or 0))
 
     def needs_rebucket(self, factor: float = 4.0) -> bool:
-        """Growth trigger for the bucket lever (the IVF ``needs_retrain``
-        discipline): the corpus outgrew the committed count ``factor``×,
-        so refreshes are sliding toward the fixed-bucket anti-pattern
-        regime (BASELINE r11k)."""
-        return self._auto_count() >= factor * self._effective_buckets()
+        return self._lever.needs_rebucket(factor)
 
     def rebucket(self, doc_buckets: int | None = None) -> int:
-        """Re-place every table under a fresh bucket count (auto ∝
-        current corpus unless given) — the amortized full rewrite that
-        keeps refreshes delta-IO as the corpus grows. Pure physical
-        placement: reads are identical across it; one shared lineage id
-        marks the multi-table commit like any build/refresh."""
+        """Re-place every table (operators/bucketing) under one fresh
+        lineage id, like any build/refresh."""
         import uuid
 
         self.check_consistent()
-        new = doc_buckets or self._auto_count()
-        col = F.pmod(F.hash(F.col(self.id_col).cast("string")), F.lit(new))
-        lineage = {"postings_lineage": uuid.uuid4().hex, "doc_buckets": new}
-        for table in [self._doclen, *self._tables.values()]:
-            table.overwrite(
-                table.read().withColumn("_bucket", col), meta=lineage
-            )
-        self._effective = new
-        return new
-
-    def _bucket(self) -> F.Column:
-        # murmur3 (F.hash) is seed-stable across sessions, so bucket
-        # assignment is reproducible between build and every later refresh.
-        # Hash the STRING form: murmur3 of int32 vs int64 differ for the
-        # same value, so an id arriving at a different numeric width (e.g.
-        # the deleted_ids frame inferring long against an int corpus)
-        # would bucket inconsistently and the merge would rewrite the
-        # wrong partition while hardlinking the stale one
-        return F.pmod(
-            F.hash(F.col(self.id_col).cast("string")),
-            F.lit(self._effective_buckets()),
+        return self._lever.rebucket(
+            doc_buckets, meta={"postings_lineage": uuid.uuid4().hex}
         )
 
     # --- build / maintain ------------------------------------------------
@@ -196,7 +163,7 @@ class PostingsIndex:
     def _doclen_delta(self, toks: DataFrame) -> DataFrame:
         return toks.select(
             self.id_col, F.size("_toks").cast("long").alias("dl"),
-            self._bucket().alias("_bucket"),
+            self._lever.col().alias("_bucket"),
         )
 
     def _postings_delta(self, toks: DataFrame, n: int) -> DataFrame:
@@ -205,13 +172,13 @@ class PostingsIndex:
                 self.id_col, F.posexplode("_toks").alias("pos", "term")
             ).select(
                 "term", self.id_col, F.col("pos").cast("long").alias("pos"),
-                self._bucket().alias("_bucket"),
+                self._lever.col().alias("_bucket"),
             )
         return (
             toks.select(self.id_col, F.explode(_grams(F.col("_toks"), n)).alias("term"))
             .groupBy("term", self.id_col)
             .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("_bucket", self._bucket())
+            .withColumn("_bucket", self._lever.col())
         )
 
     def build(self, docs: DataFrame) -> None:
@@ -227,8 +194,6 @@ class PostingsIndex:
         # logical index, but commit independently — a crash mid-loop would
         # otherwise leave doclen updated with stale postings and silently
         # skew every bm25/tfidf score. exists() verifies the id agrees.
-        from affinity_spark.operators.bucketing import auto_bucket_count
-
         toks = self._tokenized(docs).persist()
         # the lever, chosen ∝ corpus (no manual knob) unless pinned by the
         # constructor; committed in the lineage meta so refreshes agree.
@@ -240,15 +205,10 @@ class PostingsIndex:
             F.count(F.lit(1)).alias("n"),
             F.sum(F.size("_toks")).alias("tok"),
         ).collect()[0]
-        self._effective = (
-            self._explicit_buckets
-            if self._explicit_buckets is not None
-            else self._capped_auto(int(row["n"]), int(row["tok"] or 0))
+        self._lever.freeze(
+            lambda: self._capped_auto(int(row["n"]), int(row["tok"] or 0))
         )
-        lineage = {
-            "postings_lineage": uuid.uuid4().hex,
-            "doc_buckets": self._effective,
-        }
+        lineage = {"postings_lineage": uuid.uuid4().hex, **self._lever.meta()}
         try:
             # the per-table writes are independent jobs over the one
             # persisted token frame (different tables, own CAS pointers):
@@ -315,11 +275,8 @@ class PostingsIndex:
             t: t._current_version_dir()
             for t in (self._doclen, *self._tables.values())
         }
-        self._effective = None
-        lineage = {
-            "postings_lineage": uuid.uuid4().hex,
-            "doc_buckets": self._effective_buckets(),
-        }
+        self._lever.refresh()
+        lineage = {"postings_lineage": uuid.uuid4().hex, **self._lever.meta()}
         toks = self._tokenized(changed_docs).persist()
         try:
             touched = toks.select(self.id_col).distinct()
@@ -329,46 +286,15 @@ class PostingsIndex:
                 )
                 touched = touched.unionByName(gone).distinct()
             touched_p = touched.persist()
-            # bucket list is driver-side but bounded by doc_buckets
-            buckets = [
-                r[0]
-                for r in touched_p.select(
-                    self._bucket().alias("_bucket")
-                ).distinct().collect()
+            buckets = self._lever.touched(touched_p)
+            deltas = [(self._doclen, self._doclen_delta(toks))] + [
+                (self._tables[n], self._postings_delta(toks, n))
+                for n in self.grams
             ]
-            touched = F.broadcast(touched_p)
-
-            def merge(table: KeyedTable, delta: DataFrame) -> None:
-                base_version = bases[table]
-                cur = table.read()
-                # ONLY the touched buckets are scanned (partition pruning);
-                # the anti-join would reorder columns (join key first) -
-                # re-select the snapshot's own order so schema is stable
-                pruned = cur.filter(F.col("_bucket").isin(buckets))
-                kept = pruned.join(touched, self.id_col, "left_anti").select(
-                    *cur.columns
+            for table, delta in deltas:
+                self._lever.merge(
+                    table, delta, touched_p, buckets, bases[table], lineage
                 )
-                # cast the delta to the SNAPSHOT's schema: a changelog at a
-                # different numeric width (long ids against an int table)
-                # would otherwise write mixed physical parquet types into
-                # one table and poison every later read
-                table.overwrite_partitions(
-                    kept.unionByName(
-                        delta.select(
-                            *[
-                                F.col(c).cast(cur.schema[c].dataType).alias(c)
-                                for c in cur.columns
-                            ]
-                        )
-                    ),
-                    buckets,
-                    expected_base=base_version,
-                    meta=lineage,
-                )
-
-            merge(self._doclen, self._doclen_delta(toks))
-            for n in self.grams:
-                merge(self._tables[n], self._postings_delta(toks, n))
             touched_p.unpersist()
         finally:
             toks.unpersist()

@@ -39,6 +39,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from affinity_spark.operators.bucketing import (
+    BucketLever,
+    auto_bucket_count,
+    bytes_floor_cap,
+)
 from affinity_spark.operators.dedup import jaccard_verify_arrays
 from affinity_spark.sources.keyed_table import KeyedTable
 
@@ -61,11 +66,6 @@ class PrefixIndex:
         self.id_col = id_col
         self.t_num = t_num
         self.t_den = t_den
-        # None = AUTO: build() sizes buckets ∝ corpus (operators/bucketing)
-        # and commits the count; every later operation resolves the
-        # COMMITTED count, so an attaching constructor can't misplace rows
-        self._explicit_buckets = doc_buckets
-        self._effective: int | None = None
         self._df = KeyedTable(
             spark, os.path.join(path, "df"), ["shingle"], ts_col="df",
             num_buckets=num_buckets,
@@ -84,6 +84,13 @@ class PrefixIndex:
             ts_col="n_shingles", num_buckets=num_buckets,
             partition_col="_bucket", single_file_partitions=True,
         )
+        # None = AUTO: build() sizes buckets ∝ corpus (operators/bucketing)
+        # and commits the count; every later operation resolves the
+        # COMMITTED count, so an attaching constructor can't misplace rows
+        self._lever = BucketLever(
+            "doc_buckets", id_col, [self._prefix, self._arrays],
+            self._capped_auto_from_arrays, doc_buckets,
+        )
         # memoized serving DataFrame: the pairs() plan is ~2 s of
         # analysis/optimization at sf0.1 — twice the execution — and a
         # serving system compiles its read once. Invalidated by
@@ -92,40 +99,12 @@ class PrefixIndex:
 
     # --- bucket lever (auto, committed-wins) ----------------------------------
 
-    def _effective_buckets(self) -> int:
-        """The committed doc-bucket count (build() stamps it; admits carry
-        it forward). Cached until build/rebucket invalidates."""
-        if self._effective is None:
-            from affinity_spark.operators.bucketing import committed_buckets
-
-            self._effective = committed_buckets(
-                self._prefix, "doc_buckets", self._explicit_buckets
-            )
-        return self._effective
-
     @property
     def doc_buckets(self) -> int:
-        return self._effective_buckets()
-
-    def _bucket_col(self, n_buckets: int | None = None) -> F.Column:
-        # string-canonical hash: murmur3 of int32 vs int64 DIFFER for
-        # the same value, so a batch arriving at a different numeric
-        # width would bucket inconsistently and the pruned merge would
-        # rewrite the wrong partition (the r5 BandIndex rule)
-        return F.pmod(
-            F.hash(F.col(self.id_col).cast("string")),
-            F.lit(n_buckets if n_buckets is not None else self._effective_buckets()),
-        )
+        return self._lever.count
 
     def needs_rebucket(self, factor: float = 4.0) -> bool:
-        """True when the corpus has outgrown the committed bucket count —
-        the auto size for the CURRENT corpus is ≥ ``factor`` × the
-        committed count, i.e. per-bucket rows grew ~factor× past the
-        target and admits are sliding toward the fixed-bucket
-        anti-pattern regime (BASELINE r11k). The growth trigger of the
-        IVFIndex ``needs_retrain`` discipline applied to the lever."""
-        ideal = self._capped_auto_from_arrays()
-        return ideal >= factor * self._effective_buckets()
+        return self._lever.needs_rebucket(factor)
 
     @staticmethod
     def _capped_auto(n_docs: int, total_shingles: int) -> int:
@@ -133,11 +112,6 @@ class PrefixIndex:
         rows (~10 B on disk, arrays table dominant); bytes-floored so
         buckets stay at least row-group-sized — finer splits only
         multiply probe-side file opens (r13)."""
-        from affinity_spark.operators.bucketing import (
-            auto_bucket_count,
-            bytes_floor_cap,
-        )
-
         return min(
             auto_bucket_count(n_docs), bytes_floor_cap(total_shingles * 10)
         )
@@ -149,21 +123,11 @@ class PrefixIndex:
         return self._capped_auto(int(row["n"]), int(row["sh"] or 0))
 
     def rebucket(self, doc_buckets: int | None = None) -> int:
-        """Re-place both partitioned tables under a fresh bucket count
-        (auto ∝ current corpus unless given) — the amortized full rewrite
-        that keeps admits delta-IO as the corpus grows (IVF ``retrain()``
-        discipline). The frozen df ORDER is untouched: bucketing is pure
-        physical placement, so served pairs are bit-identical before and
-        after (pinned by tests). Returns the new count."""
+        """Re-place both partitioned tables (operators/bucketing). The
+        frozen df ORDER is untouched, so served pairs are bit-identical
+        before and after (pinned by tests). Returns the new count."""
         self._check_sync()
-        new = doc_buckets or self._capped_auto_from_arrays()
-        for table in (self._arrays, self._prefix):
-            cur = table.read()
-            table.overwrite(
-                cur.withColumn("_bucket", self._bucket_col(new)),
-                meta={**table.commit_meta(), "doc_buckets": new},
-            )
-        self._effective = new
+        new = self._lever.rebucket(doc_buckets)
         self._pairs_df = None
         return new
 
@@ -236,11 +200,7 @@ class PrefixIndex:
         n_docs = int(row["n"])
         # the lever, chosen ∝ corpus (no manual knob) unless pinned by the
         # constructor; committed below so every later operation agrees
-        self._effective = (
-            self._explicit_buckets
-            if self._explicit_buckets is not None
-            else self._capped_auto(n_docs, int(row["sh"] or 0))
-        )
+        self._lever.freeze(lambda: self._capped_auto(n_docs, int(row["sh"] or 0)))
         dfc = (
             docs_arr.select(F.explode("shingles").alias("shingle"))
             .groupBy("shingle")
@@ -256,15 +216,16 @@ class PrefixIndex:
         # commit above leaves old prefix/arrays (mutually consistent)
         # under a NEW order — their own sync tokens still match, so only
         # the df_sync tie makes that tear loud (r11 ADVICE).
+        meta = {"sync": sync, "df_sync": sync, **self._lever.meta()}
         self._arrays.overwrite(
-            self._with_hashes(docs_arr).withColumn("_bucket", self._bucket_col()),
-            meta={"sync": sync, "df_sync": sync, "doc_buckets": self._effective},
+            self._with_hashes(docs_arr).withColumn("_bucket", self._lever.col()),
+            meta=meta,
         )
         self._prefix.overwrite(
             self._prefix_entries(docs_arr, self._df.read()).withColumn(
-                "_bucket", self._bucket_col()
+                "_bucket", self._lever.col()
             ),
-            meta={"sync": sync, "df_sync": sync, "doc_buckets": self._effective},
+            meta=meta,
         )
         docs_arr.unpersist()
         self._pairs_df = None
@@ -323,29 +284,22 @@ class PrefixIndex:
         # a prefix/arrays sync tear is fine here — replaying the batch via
         # this very admit is the documented healing path
         self._check_order()
-        # CAS anchors FIRST, then re-resolve the committed lever: never
-        # rank/merge under a bucket count cached before another
-        # instance's rebucket() (r12 ADVICE) — and anchor both commits to
-        # the versions the lever was resolved against, so a rebucket
-        # landing mid-admit fails the CAS loudly instead of merging
-        # stale placements (r13 review)
+        # CAS anchors FIRST, then re-resolve the committed lever
+        # (operators/bucketing) — both commits anchor to the versions the
+        # lever was resolved against, so a rebucket landing mid-admit
+        # fails the CAS loudly instead of merging stale placements
         bases = {
             t: t._current_version_dir() for t in (self._arrays, self._prefix)
         }
-        self._effective = None
+        self._lever.refresh()
         docs_arr = docs_arr.persist()
         touched = docs_arr.select(self.id_col).distinct().persist()
-        buckets = [
-            r[0]
-            for r in touched.select(
-                self._bucket_col().alias("_bucket")
-            ).distinct().collect()
-        ]
+        buckets = self._lever.touched(touched)
         entries = self._prefix_entries(docs_arr, self._df.read()).withColumn(
-            "_bucket", self._bucket_col()
+            "_bucket", self._lever.col()
         )
         arrays_delta = self._with_hashes(docs_arr).withColumn(
-            "_bucket", self._bucket_col()
+            "_bucket", self._lever.col()
         )
         # arrays BEFORE prefix (the build-order rule): a crash between the
         # two commits then reads as "batch not yet admitted" — extra verify
@@ -356,26 +310,9 @@ class PrefixIndex:
 
         sync = uuid.uuid4().hex
         for table, delta in ((self._arrays, arrays_delta), (self._prefix, entries)):
-            base_version = bases[table]
-            cur = table.read()
-            kept = (
-                cur.filter(F.col("_bucket").isin(buckets))
-                .join(F.broadcast(touched), self.id_col, "left_anti")
-                .select(*cur.columns)
-            )
-            # snapshot-width cast: a delta at a different numeric width
-            # would write mixed physical parquet types into one table
-            delta = delta.select(
-                *[
-                    F.col(c).cast(cur.schema[c].dataType).alias(c)
-                    for c in cur.columns
-                ]
-            )
-            table.overwrite_partitions(
-                kept.unionByName(delta),
-                buckets,
-                expected_base=base_version,
-                meta={**table.commit_meta(), "sync": sync},
+            self._lever.merge(
+                table, delta, touched, buckets, bases[table],
+                {**table.commit_meta(), "sync": sync},
             )
         touched.unpersist()
         docs_arr.unpersist()
@@ -389,25 +326,17 @@ class PrefixIndex:
             return False
         return self._arrays.read().count() > n0 * (1.0 + max_growth)
 
-    def maintainer(self, compact_every: int = 32):
+    def maintainer(self):
         """foreachBatch streaming maintenance — the maintained-family
         contract: each micro-batch of (id, shingles, n_shingles) rows is
         admitted under the frozen order. The keyed partition merge makes
         replay idempotent (a replayed batch rewrites its own rows); no
-        fence needed — nothing here is additive. Every ``compact_every``
-        admits both partitioned tables compact (admits rewrite touched
-        buckets at shuffle-partition granularity — the small-files rule,
-        see DDStore.maintainer). 0 disables."""
-        state = {"n": 0}
+        fence needed — nothing here is additive."""
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
                 return
             self.admit(batch_df)
-            state["n"] += 1
-            if compact_every and state["n"] % compact_every == 0:
-                self._prefix.compact()
-                self._arrays.compact()
 
         return apply
 

@@ -28,7 +28,8 @@ Four KeyedTables form one logical store under a shared lineage id:
 - ``hist``     (lang, score, n) — the value-domain-sized score histogram,
   maintained ADDITIVELY on admit (new docs add counts, replaced docs
   subtract their old ones). Addition is not replay-idempotent, so the
-  streaming maintainer carries the DDStore run-scoped applied-fence.
+  streaming maintainer fences each admit (the DDStore rule; the fence
+  commits with the signals table).
 - ``cutoffs``  (lang, c1, c2) — per-language tertile cutoffs, re-derived
   from ``hist`` after every admit (histogram-sized work, never a
   corpus-sized rank window) and committed so the read path is a pure
@@ -69,9 +70,6 @@ _CORE_COLS = [
 
 class QualityStore:
     """A directory of KeyedTables forming one maintained quality store."""
-
-    # replay-fence ledger bound — see DDStore.FENCE_WINDOW for rationale.
-    FENCE_WINDOW = 256
 
     def __init__(
         self,
@@ -237,14 +235,13 @@ class QualityStore:
             "q_gen": int(self._model.commit_meta().get("q_gen", -1)) + 1,
             "n_at_build": docs.count(),
             "next_gen": 1,
-            "q_applied": [],
         }
         lineage["h_sync"] = self._sync_token(lineage)
         self._model.overwrite(model, meta=lineage)
         sig = self._with_canonical(
             self._signals_delta(docs, self.model())
         ).withColumn("gen", F.lit("g0"))
-        self._signals.overwrite(sig, meta=lineage)
+        self._signals.overwrite(sig, meta=lineage, reset_fences=True)
         hist = self._hist_of(self._signals.read())
         self._hist.overwrite(hist, meta=lineage)
         self._cutoffs.overwrite(
@@ -268,17 +265,12 @@ class QualityStore:
         Matches a full rebuild against the same model exactly (pinned by
         tests/test_quality_store.py). ``fence`` is the replay key
         ("run_id:batch_id") — the DDStore additive-fence rule: histogram
-        addition is not idempotent, so a fenced batch is dropped WHOLE.
-        The ledger keeps only the trailing ``FENCE_WINDOW`` entries (sized
-        for streaming's trailing-batch replay); a manual re-admit of a
-        fence older than the window floor silently re-applies — see
-        DDStore.admit for the caveat."""
-        # the signals table is the meta authority for admit state (it is
-        # rewritten by every admit anyway); the model table keeps its
-        # build-time meta — the model itself is immutable across admits
+        addition is not idempotent, so a fenced batch is dropped WHOLE."""
+        # the signals table is the meta and fence authority for admit
+        # state (it is rewritten by every admit anyway); the model table
+        # keeps its build-time meta — the model is immutable across admits
         meta = self._signals.commit_meta()
-        applied = list(meta.get("q_applied") or [])
-        if fence is not None and fence in applied:
+        if fence is not None and fence in self._signals.applied_fences():
             # the batch's signal commit landed; make sure the DERIVED
             # tables did too (a crash between the signals and hist
             # commits would otherwise desync them forever, because the
@@ -294,9 +286,6 @@ class QualityStore:
             if k in meta
         }
         lineage["next_gen"] = gen_no + 1
-        lineage["q_applied"] = (
-            applied + ([fence] if fence else [])
-        )[-self.FENCE_WINDOW :]
         lineage["h_sync"] = self._sync_token(lineage)
 
         delta = self._signals_delta(docs, self.model())
@@ -369,7 +358,7 @@ class QualityStore:
         out = new_rows if kept is None else kept.unionByName(new_rows)
         base_version = self._signals._current_version_dir()
         self._signals.overwrite_partitions(
-            out, gens, expected_base=base_version, meta=lineage
+            out, gens, expected_base=base_version, meta=lineage, fence=fence
         )
 
         # histogram: add the batch's counts, subtract replaced docs' old
@@ -447,9 +436,9 @@ class QualityStore:
         would otherwise accumulate one tiny hive dir per micro-batch —
         file-count pressure and planner overhead, the small-files problem.
         Signals are FINAL (scored against the standing model), so
-        compaction is a pure rewrite — no rescoring — and the fence
-        ledger and lineage carry forward (a replayed batch still fences
-        after compaction)."""
+        compaction is a pure rewrite — no rescoring — and the lineage and
+        the table's fence ledger carry forward (a replayed batch still
+        fences after compaction)."""
         meta = self._signals.commit_meta()
         sig = (
             self._signals.read()

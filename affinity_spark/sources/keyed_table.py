@@ -20,7 +20,14 @@ readers without a table format dependency:
   maintenance jobs on one table need the same guarantee here);
 - the last ``retain_versions`` snapshots stay on disk so a lazy DataFrame
   over the previous version keeps reading during and after the next commit;
-  ``vacuum_versions`` reclaims older ones.
+  ``vacuum_versions`` reclaims older ones;
+- the pointer file also carries a bounded replay-fence ledger: a commit
+  that passes ``fence=`` records it atomically with the version swap, and
+  every other commit carries the ledger forward. A store whose state
+  merges additively (DDStore, QualityStore) drops a batch whose fence is
+  already in ``applied_fences()`` — the exactly-once marker committed
+  with the snapshot it describes (Flink's checkpointed source offsets,
+  Kafka's transactional commit).
 """
 
 from __future__ import annotations
@@ -46,6 +53,20 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class KeyedTable:
+    #: The replay-fence ledger keeps only this many trailing fences.
+    #: Structured Streaming replays at most the last uncommitted batch(es)
+    #: after a restart, so a bounded window keeps the fence while holding
+    #: the pointer file O(1) — an unbounded ledger is O(n) per commit and
+    #: O(n^2) cumulative over a long-running stream. A MANUAL re-admit of
+    #: a fence older than the window floor is applied again.
+    FENCE_WINDOW = 256
+    #: Commit-meta keys where DDStore and QualityStore kept their own
+    #: ledgers before it moved into the pointer file. A record without
+    #: ``fences`` reads its ledger from them, so a stream that resumes on
+    #: a store committed by older code still fences its replayed batch;
+    #: the next commit writes the ledger to ``fences``.
+    _LEGACY_FENCE_KEYS = ("dd_applied", "q_applied")
+
     def __init__(
         self,
         spark: SparkSession,
@@ -98,11 +119,15 @@ class KeyedTable:
     def _pointer(self) -> str:
         return os.path.join(self.path, "_current.json")
 
-    def _current_version_dir(self) -> str | None:
+    def _pointer_record(self) -> dict:
         if not os.path.exists(self._pointer):
-            return None
+            return {}
         with open(self._pointer) as f:
-            return os.path.join(self.path, json.load(f)["version"])
+            return json.load(f)
+
+    def _current_version_dir(self) -> str | None:
+        record = self._pointer_record()
+        return os.path.join(self.path, record["version"]) if record else None
 
     @property
     def _lock(self) -> str:
@@ -146,24 +171,43 @@ class KeyedTable:
                 time.sleep(0.05)
 
     def commit_meta(self) -> dict:
-        """Application metadata recorded with the current commit (e.g. the
-        last applied streaming batch id); ``{}`` before any commit."""
-        if not os.path.exists(self._pointer):
-            return {}
-        with open(self._pointer) as f:
-            return json.load(f).get("meta") or {}
+        """Application metadata recorded with the current commit (e.g. a
+        store's lineage id or bucket count); ``{}`` before any commit."""
+        return self._pointer_record().get("meta") or {}
+
+    def applied_fences(self) -> list[str]:
+        """The replay fences committed up to the current snapshot, oldest
+        first (the trailing ``FENCE_WINDOW``); ``[]`` before any commit."""
+        return self._fences_of(self._pointer_record())
+
+    @classmethod
+    def _fences_of(cls, record: dict) -> list[str]:
+        if "fences" in record:
+            return list(record["fences"] or [])
+        meta = record.get("meta") or {}
+        return [f for k in cls._LEGACY_FENCE_KEYS for f in meta.get(k) or []]
 
     def _commit_version(
-        self, version: str, expected_base: str | None, meta: dict | None = None
+        self,
+        version: str,
+        expected_base: str | None,
+        meta: dict | None = None,
+        fence: str | None = None,
+        reset_fences: bool = False,
     ) -> None:
         """Check-and-swap: commit only if the current version is still the
         one this write was computed from; otherwise a concurrent writer won
-        and committing would silently drop its changes. ``meta`` rides in
-        the pointer file atomically with the version swap, so "this batch
-        was applied" and "this snapshot is current" are one fact."""
+        and committing would silently drop its changes. ``meta`` and the
+        fence ledger ride in the pointer file atomically with the version
+        swap, so "this batch was applied" and "this snapshot is current"
+        are one fact. The ledger is the base commit's, read under the lock
+        (``reset_fences`` starts an empty one), plus ``fence`` if given."""
         fd = self._acquire_lock()
         try:
-            current = self._current_version_dir()
+            record = self._pointer_record()
+            current = (
+                os.path.join(self.path, record["version"]) if record else None
+            )
             if current != expected_base:
                 raise ConcurrentWriteError(
                     f"table at {self.path} moved from "
@@ -171,6 +215,9 @@ class KeyedTable:
                     f"to {os.path.basename(current) if current else None} during "
                     "this write; re-read and retry"
                 )
+            fences = [] if reset_fences else self._fences_of(record)
+            if fence is not None and fence not in fences:
+                fences.append(fence)
             tmp = self._pointer + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(
@@ -178,6 +225,7 @@ class KeyedTable:
                         "version": version,
                         "committed_at": time.time(),
                         "meta": meta or {},
+                        "fences": fences[-self.FENCE_WINDOW :],
                     },
                     f,
                 )
@@ -244,6 +292,8 @@ class KeyedTable:
         df: DataFrame,
         expected_base: str | None = "UNSET",
         meta: dict | None = None,
+        fence: str | None = None,
+        reset_fences: bool = False,
     ) -> None:
         """Write a new snapshot version and CAS the pointer to it.
 
@@ -251,10 +301,13 @@ class KeyedTable:
         (``None`` for a first write); it defaults to the current version at
         call time — pass the captured value explicitly whenever ``df`` was
         derived from an earlier ``read()`` so a racing writer is detected.
-        ``meta`` (application metadata, e.g. a streaming batch id) is
-        committed atomically with the pointer swap; ``None`` carries the
-        previous commit's metadata forward so maintenance writes (compact,
-        vacuum) don't erase replay markers.
+        ``meta`` (application metadata) is committed atomically with the
+        pointer swap; ``None`` carries the previous commit's metadata
+        forward. ``fence`` (a replay key such as "run_id:batch_id") joins
+        the fence ledger in the same swap; the ledger otherwise carries
+        forward unchanged, whatever ``meta`` says, unless
+        ``reset_fences`` starts an empty one (a store's full rebuild).
+        A loser of the CAS records nothing.
         """
         if self.external:
             raise PermissionError(f"table at {self.path} is external/read-only")
@@ -266,7 +319,9 @@ class KeyedTable:
         out = os.path.join(self.path, version)
         self._write_snapshot(df, out)
         try:
-            self._commit_version(version, expected_base, meta)
+            self._commit_version(
+                version, expected_base, meta, fence, reset_fences
+            )
         except ConcurrentWriteError:
             shutil.rmtree(out, ignore_errors=True)  # orphaned loser snapshot
             raise
@@ -300,6 +355,7 @@ class KeyedTable:
         touched: Sequence[object],
         expected_base: str | None = "UNSET",
         meta: dict | None = None,
+        fence: str | None = None,
     ) -> None:
         """Partition-pruned snapshot commit: ``delta`` is the COMPLETE new
         content of the ``touched`` partition values (and must contain rows
@@ -307,8 +363,9 @@ class KeyedTable:
         the new snapshot by HARDLINKING its files from the base version —
         zero data IO for untouched partitions, so merge cost scales with
         the delta, not the table. Same CAS pointer commit as ``overwrite``
-        (a racing writer loses loudly); version reclamation only unlinks
-        names, so inodes shared across retained snapshots survive it.
+        (a racing writer loses loudly) and fence ledger; version
+        reclamation only unlinks names, so inodes shared across retained
+        snapshots survive it.
         """
         if self.external:
             raise PermissionError(f"table at {self.path} is external/read-only")
@@ -318,7 +375,7 @@ class KeyedTable:
             expected_base = self._current_version_dir()
         if expected_base is None:
             # nothing to carry over - identical to a first full write
-            self.overwrite(delta, expected_base=None, meta=meta)
+            self.overwrite(delta, expected_base=None, meta=meta, fence=fence)
             return
         if meta is None:
             meta = self.commit_meta()
@@ -341,7 +398,7 @@ class KeyedTable:
                 if fname.endswith(".parquet"):
                     os.link(os.path.join(src, fname), os.path.join(dst, fname))
         try:
-            self._commit_version(version, expected_base, meta)
+            self._commit_version(version, expected_base, meta, fence)
         except ConcurrentWriteError:
             shutil.rmtree(out, ignore_errors=True)
             raise

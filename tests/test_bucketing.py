@@ -213,3 +213,128 @@ def test_bandindex_auto_size_commit(spark, tmp_path):
     assert not ix.needs_rebucket()
     assert ix.rebucket(doc_buckets=16) == 16
     assert ix.doc_buckets == 16
+
+
+def _band_case(spark):
+    from affinity_spark.operators.bandindex import BandIndex
+
+    docs = _docs(spark, 45)
+
+    def rows(lo, hi):
+        return _arrs(spark, docs.filter(F.col("doc_id").between(lo, hi - 1)))
+
+    return dict(
+        make=lambda p: BandIndex(spark, p),
+        build=lambda s, hi: s.build(rows(0, hi)),
+        admit=lambda s, lo, hi: s.admit(rows(lo, hi)),
+        placed=lambda s: [(s._table, "doc_id")],
+        content=lambda s: s.bands(),
+    )
+
+
+def _postings_case(spark):
+    from affinity_spark.operators.postings import PostingsIndex
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i} beta {'delta' if i % 2 else 'omega'}") for i in range(45)],
+        "doc_id long, text string",
+    )
+
+    def rows(lo, hi):
+        return docs.filter(F.col("doc_id").between(lo, hi - 1))
+
+    return dict(
+        make=lambda p: PostingsIndex(spark, p, grams=(1, 2)),
+        build=lambda s, hi: s.build(rows(0, hi)),
+        admit=lambda s, lo, hi: s.refresh(rows(lo, hi)),
+        placed=lambda s: [
+            (t, "doc_id") for t in (s._doclen, *s._tables.values())
+        ],
+        content=lambda s: s.positional().unionByName(
+            s.tf_postings(2).withColumnRenamed("tf", "pos")
+        ),
+    )
+
+
+def _prefix_case(spark):
+    from affinity_spark.operators.prefix_index import PrefixIndex
+
+    docs = _docs(spark, 45)
+
+    def rows(lo, hi):
+        return _arrs(spark, docs.filter(F.col("doc_id").between(lo, hi - 1)))
+
+    return dict(
+        make=lambda p: PrefixIndex(spark, p),
+        build=lambda s, hi: s.build(rows(0, hi)),
+        admit=lambda s, lo, hi: s.admit(rows(lo, hi)),
+        placed=lambda s: [(s._prefix, "doc_id"), (s._arrays, "doc_id")],
+        content=lambda s: s.pairs(),
+    )
+
+
+def _cluster_case(spark):
+    from affinity_spark.operators.cluster_store import ClusterStore
+
+    # the last batch joins new docs to both committed clusters {0, 6} and
+    # {3, 9, 20, 21} and merges them through doc 24 (a relabel)
+    edges = [(0, 6), (3, 9), (3, 20), (20, 21), (0, 23), (21, 24), (6, 24)]
+
+    def ids(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("doc_id"))
+
+    def pairs(lo, hi):
+        return spark.createDataFrame(
+            [(a, b) for a, b in edges if lo <= b < hi], "id_a long, id_b long"
+        )
+
+    return dict(
+        make=lambda p: ClusterStore(spark, p),
+        build=lambda s, hi: s.build(ids(0, hi), pairs(0, hi)),
+        admit=lambda s, lo, hi: s.admit(ids(lo, hi), pairs(lo, hi)),
+        placed=lambda s: [(s._table, "cluster_id")],
+        content=lambda s: s.assignments(),
+    )
+
+
+def _media_case(spark):
+    from affinity_spark.operators.media_index import MediaIndex
+    from tests.test_media_index import _fps
+
+    return dict(
+        make=lambda p: MediaIndex(spark, p),
+        build=lambda s, hi: s.build(_fps(spark, range(hi))),
+        admit=lambda s, lo, hi: s.admit(_fps(spark, range(lo, hi))),
+        placed=lambda s: [(s._table, "doc_id")],
+        content=lambda s: s.fingerprints(),
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_band_case, _postings_case, _prefix_case, _cluster_case, _media_case],
+    ids=["BandIndex", "PostingsIndex", "PrefixIndex", "ClusterStore", "MediaIndex"],
+)
+def test_admit_after_foreign_rebucket_uses_committed_lever(spark, tmp_path, case):
+    """A long-lived instance whose cached bucket count predates ANOTHER
+    instance's rebucket() must re-resolve the committed lever at admit —
+    a stale modulus would merge the wrong dirs while hardlinking stale
+    placements (the r5 silent-corruption class, r12 ADVICE medium)."""
+    c = case(spark)
+    path = str(tmp_path / "store")
+    a = c["make"](path)
+    c["build"](a, 20)
+    c["admit"](a, 20, 22)  # a's lever cache is now warm
+    b = c["make"](path)
+    assert b.rebucket(32) == 32
+    c["admit"](a, 22, 26)  # must place under the NEW modulus
+    # every committed row sits in its bucket under the committed count
+    for table, col in c["placed"](a):
+        want = F.pmod(F.hash(F.col(col).cast("string")), F.lit(32))
+        assert table.read().filter(F.col("_bucket") != want).count() == 0
+    # committed truth == a fresh build: no duplicate or stale rows
+    fresh = c["make"](str(tmp_path / "fresh"))
+    c["build"](fresh, 26)
+    assert sorted(map(tuple, c["content"](a).collect())) == sorted(
+        map(tuple, c["content"](fresh).collect())
+    )

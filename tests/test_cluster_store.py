@@ -152,16 +152,17 @@ def test_admit_is_replay_idempotent_and_prunes_buckets(spark, tmp_path):
     # the replay rewrote only the batch's cluster buckets; every other
     # bucket hardlinked forward (same inodes)
     new = st._table._current_version_dir()
-    touched = {
-        int(r[0])
-        for r in st.spark.createDataFrame(
-            [(c,) for c in
-             {r["cluster_id"]
-              for r in st.assignments().collect()
-              if r["doc_id"] >= 16}],
-            "c long",
-        ).select(st._bucket_of(F.col("c"))).collect()
-    }
+    touched = set(
+        st._lever.touched(
+            st.spark.createDataFrame(
+                [(c,) for c in
+                 {r["cluster_id"]
+                  for r in st.assignments().collect()
+                  if r["doc_id"] >= 16}],
+                "cluster_id long",
+            )
+        )
+    )
     carried = rewritten = 0
     for bkt in range(8):
         old = mid_inodes[bkt]

@@ -133,23 +133,6 @@ def test_streaming_maintainer_matches_direct_build(spark, tmp_path):
     }
 
 
-def test_fence_ledger_is_bounded(spark, tmp_path, monkeypatch):
-    """The applied-fence ledger keeps only a trailing window (streaming
-    replay only re-fires recent batches): old fences age out, recent ones
-    still fence — commit meta stays O(1) over a long-running stream."""
-    monkeypatch.setattr(DDStore, "FENCE_WINDOW", 3)
-    st = DDStore(spark, str(tmp_path / "bound"))
-    st.build(_df(spark, _rows(60)))
-    batches = [_df(spark, _rows(100 + 10 * i)[-5:]) for i in range(5)]
-    for i, b in enumerate(batches):
-        st.admit(b, fence=f"run:{i}")
-    ledger = st._applied()
-    assert ledger == ["run:2", "run:3", "run:4"]
-    n = st.daily().agg(F.sum("n")).collect()[0][0]
-    st.admit(batches[-1], fence="run:4")  # recent fence still blocks
-    assert st.daily().agg(F.sum("n")).collect()[0][0] == n
-
-
 def test_maintainer_scheduled_compaction_bounds_files(spark, tmp_path):
     """Maintainer-driven compaction (r10 verdict #5): each admit rewrites
     its touched day partitions at shuffle-partition granularity, so file

@@ -172,37 +172,6 @@ def test_admit_on_empty_table_commits_auto_lever(spark, tmp_path):
     assert _pairs_set(idx.pairs()) == _pairs_set(_exhaustive(spark, batch))
 
 
-def test_admit_after_foreign_rebucket_uses_committed_lever(spark, tmp_path):
-    """A long-lived instance whose cached bucket count predates ANOTHER
-    instance's rebucket() must re-resolve the committed lever at admit —
-    a stale modulus would merge the wrong dirs while hardlinking stale
-    placements (the r5 silent-corruption class, r12 ADVICE medium)."""
-    path = str(tmp_path / "mi")
-    a = MediaIndex(spark, path)
-    a.build(_fps(spark, range(12)))
-    a.admit(_fps(spark, range(12, 15)))  # a's lever cache is now warm
-    b = MediaIndex(spark, path)
-    assert b.rebucket(doc_buckets=32) == 32
-    a.admit(_fps(spark, range(15, 21)))  # must place under the NEW modulus
-    full = _fps(spark, range(21))
-    # committed truth == a fresh rebuild: no duplicate/stale rows anywhere
-    fresh = MediaIndex(spark, str(tmp_path / "fresh"))
-    fresh.build(full)
-    got = {
-        tuple(r) for r in a._table.read().select(
-            "doc_id", "modality", "fp", "_bucket"
-        ).collect()
-    }
-    want = {
-        tuple(r) for r in fresh._table.read().withColumn(
-            "_bucket",
-            F.pmod(F.hash(F.col("doc_id").cast("string")), F.lit(32)),
-        ).select("doc_id", "modality", "fp", "_bucket").collect()
-    }
-    assert got == want
-    assert _pairs_set(a.pairs()) == _pairs_set(_exhaustive(spark, full))
-
-
 def test_streaming_maintainer_admits_batches(spark, tmp_path):
     """The maintained-family streaming contract: micro-batches of doc ids
     flow through maintainer()'s foreachBatch, each fingerprinted ONCE

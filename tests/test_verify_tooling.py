@@ -1,10 +1,13 @@
 """The local oracle gate's comparator must itself be trustworthy:
-order-insensitive, type-canonicalizing, and sensitive to real differences."""
+order-insensitive, type-canonicalizing, and sensitive to real differences.
+The profiling tool must reject a missing query with its usage line."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+
+import pytest
 
 spec = importlib.util.spec_from_file_location(
     "verify_local",
@@ -49,3 +52,26 @@ def test_frame_hash_int_float_equivalence():
     h1 = vl.frame_hash(["n"], [(2,)])
     h2 = vl.frame_hash(["n"], [(2.0,)])
     assert h1 == h2
+
+
+def _stage_profile():
+    spec = importlib.util.spec_from_file_location(
+        "stage_profile",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "stage_profile.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_stage_profile_argument_parsing(monkeypatch, capsys, tmp_path):
+    sp = _stage_profile()
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/sf/default")
+    # no query: usage line + exit 2, not an IndexError
+    with pytest.raises(SystemExit) as exc:
+        sp.parse_args([])
+    assert exc.value.code == 2
+    assert "usage:" in capsys.readouterr().err
+    # a lone argument is the query even when a directory has its name
+    assert sp.parse_args([str(tmp_path)]) == ("/sf/default", str(tmp_path))
+    assert sp.parse_args([str(tmp_path), "q1"]) == (str(tmp_path), "q1")

@@ -17,14 +17,25 @@ from affinity_spark import get_spark
 from affinity_spark.cache import release_shared
 
 
-def main() -> None:
-    args = sys.argv[1:]
+USAGE = "usage: python tools/stage_profile.py [sf_dir] query"
+
+
+def parse_args(args: list[str]) -> tuple[str, str]:
+    """(sf_dir, query): the first argument is the sf_dir only when a query
+    name follows it, so a query named like a directory stays a query."""
+    if len(args) not in (1, 2):
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
     sf_dir = (
-        args.pop(0)
-        if args and os.path.isdir(args[0])
+        args[0]
+        if len(args) == 2
         else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    name = args[0]
+    return sf_dir, args[-1]
+
+
+def main() -> None:
+    sf_dir, name = parse_args(sys.argv[1:])
     spark = get_spark(
         app_name="affinity-stage-profile",
         conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "40000"},
